@@ -16,7 +16,8 @@ materialization on executors, zero driver collect — so timings reflect
 the whole plan (scan → shuffle → UDF → write), not a pruned count().
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_REPLICATE (default 20).
+SPARK_GRAFT_CPUS (default: the cores this process may run on),
+SPARK_GRAFT_BENCH_REPLICATE (default 20).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from luzzu_spark.fixtures import as_webpages, load_table  # noqa: E402
-from luzzu_spark.session import get_spark  # noqa: E402
+from luzzu_spark.session import get_spark, local_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "20"))
@@ -320,7 +321,7 @@ def _latest_scaling_run() -> dict:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     # box-ceiling control FIRST (before the JVM exists): pure-CPU md5
     # serial + full-width — recorded in the output JSON so a contended
     # host is visible in the artifact itself (VERDICT r03 item 2)

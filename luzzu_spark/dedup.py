@@ -608,53 +608,82 @@ def _bloom_positions(h1: np.ndarray, h2: np.ndarray, k: int,
     return (u1 + i * u2) % np.uint64(m_bits)
 
 
+def _bloom_set(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int,
+               m_bits: int) -> None:
+    """Set the k bits of every (h1, h2) row in ``bm`` (in place)."""
+    pos = _bloom_positions(h1, h2, k, m_bits).reshape(-1)
+    np.bitwise_or.at(bm, (pos >> np.uint64(3)).astype(np.int64),
+                     np.left_shift(np.uint8(1),
+                                   (pos & np.uint64(7)).astype(np.uint8)))
+
+
+def _bloom_test(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, k: int,
+                m_bits: int) -> np.ndarray:
+    """Per row: are all k bits of (h1, h2) set in ``bm``?"""
+    pos = _bloom_positions(h1, h2, k, m_bits)
+    return ((bm[(pos >> np.uint64(3)).astype(np.int64)]
+             & np.left_shift(np.uint8(1),
+                             (pos & np.uint64(7)).astype(np.uint8)))
+            != 0).all(axis=1)
+
+
 def _bloom_hash_cols(key_col) -> tuple:
     return (F.xxhash64(key_col).alias("_h1"),
             F.xxhash64(key_col, F.lit(1)).alias("_h2"))
 
 
-def bloom_build(seen: DataFrame, key: str, m_bits: int, k: int) -> bytes:
-    """OR-merged Bloom bitmap over the seen keys. Tree-shaped merge:
-    each scan partition folds its rows into ONE m/8-byte bitmap
-    (mapInPandas — the key column is the only thing read), bitmaps OR
-    within 64 groups, then once more to a single row. The driver
-    receives exactly one bitmap — m/8 bytes by construction,
-    independent of corpus row count (allowlisted in plan_audit)."""
+_BLOOM_SCHEMA = "_g int, _bm binary"
+
+
+def _bloom_fold(hashed: DataFrame, m_bits: int, k: int) -> DataFrame:
+    """(_g, _bm) partial bitmaps: each task folds its (_h1, _h2, _g)
+    rows into ONE m/8-byte bitmap per group it holds (mapInPandas —
+    the hash columns are the only thing read)."""
     nbytes = m_bits // 8
-    hashed = seen.select(*_bloom_hash_cols(F.col(key)),
-                         (F.spark_partition_id() % 64).alias("_gid"))
 
     def fold(batches):
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        gid, any_rows = 0, False
+        bms: dict[int, np.ndarray] = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
-            any_rows = True
-            gid = int(pdf["_gid"].iloc[0])
-            pos = _bloom_positions(pdf["_h1"].to_numpy(),
-                                   pdf["_h2"].to_numpy(),
-                                   k, m_bits).reshape(-1)
-            np.bitwise_or.at(
-                bm, (pos >> np.uint64(3)).astype(np.int64),
-                np.left_shift(np.uint8(1),
-                              (pos & np.uint64(7)).astype(np.uint8)))
-        if any_rows:
-            yield pd.DataFrame({"_gid": [gid], "_bm": [bm.tobytes()]})
+            for g, grp in pdf.groupby("_g"):
+                _bloom_set(bms.setdefault(int(g),
+                                          np.zeros(nbytes, np.uint8)),
+                           grp["_h1"].to_numpy(), grp["_h2"].to_numpy(),
+                           k, m_bits)
+        if bms:
+            yield pd.DataFrame({"_g": list(bms),
+                                "_bm": [b.tobytes()
+                                        for b in bms.values()]})
+
+    return hashed.mapInPandas(fold, schema=_BLOOM_SCHEMA)
+
+
+def _bloom_merge(bitmaps: DataFrame, m_bits: int) -> DataFrame:
+    """OR the (_g, _bm) bitmaps of each group into one row per _g."""
+    nbytes = m_bits // 8
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         bm = np.zeros(nbytes, dtype=np.uint8)
         for b in pdf["_bm"]:
             bm |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"_gid": [0], "_bm": [bm.tobytes()]})
+        return pd.DataFrame({"_g": [int(pdf["_g"].iloc[0])],
+                             "_bm": [bm.tobytes()]})
 
-    schema = "_gid int, _bm binary"
-    lvl1 = (hashed.mapInPandas(fold, schema=schema)
-            .groupBy("_gid").applyInPandas(merge, schema=schema))
-    final = (lvl1.withColumn("_g", F.lit(0)).groupBy("_g")
-             .applyInPandas(merge, schema=schema))
+    return bitmaps.groupBy("_g").applyInPandas(merge, schema=_BLOOM_SCHEMA)
+
+
+def bloom_build(seen: DataFrame, key: str, m_bits: int, k: int) -> bytes:
+    """OR-merged Bloom bitmap over the seen keys. Tree-shaped merge:
+    each scan partition folds its rows into ONE m/8-byte bitmap, bitmaps
+    OR within 64 groups (partition id mod 64), then once more to a
+    single row. The driver receives exactly one bitmap — m/8 bytes by
+    construction, independent of corpus row count (allowlisted in
+    plan_audit)."""
+    hashed = seen.select(*_bloom_hash_cols(F.col(key)),
+                         (F.spark_partition_id() % 64).alias("_g"))
+    lvl1 = _bloom_merge(_bloom_fold(hashed, m_bits, k), m_bits)
+    final = _bloom_merge(lvl1.withColumn("_g", F.lit(0)), m_bits)
     bitmap_rows = final.collect()  # bounded: ≤1 row of m/8 bytes
-    return bitmap_rows[0]["_bm"] if bitmap_rows else bytes(nbytes)
+    return bitmap_rows[0]["_bm"] if bitmap_rows else bytes(m_bits // 8)
 
 
 def _bloom_membership_col(spark, bloom: bytes, k: int, m_bits: int,
@@ -670,29 +699,24 @@ def _bloom_membership_col(spark, bloom: bytes, k: int, m_bits: int,
     @pandas_udf("boolean")
     def might_contain(h1: pd.Series, h2: pd.Series) -> pd.Series:
         bm = np.frombuffer(bc.value, dtype=np.uint8)
-        pos = _bloom_positions(h1.to_numpy(), h2.to_numpy(), k, m_bits)
-        hits = (bm[(pos >> np.uint64(3)).astype(np.int64)]
-                & np.left_shift(np.uint8(1),
-                                (pos & np.uint64(7)).astype(np.uint8))
-                ) != 0
-        return pd.Series(hits.all(axis=1), index=h1.index)
+        return pd.Series(_bloom_test(bm, h1.to_numpy(), h2.to_numpy(),
+                                     k, m_bits), index=h1.index)
 
     h1, h2 = _bloom_hash_cols(key_col)
     return might_contain.asNondeterministic()(h1, h2)
 
 
-def _bloom_shard_col(key_col, shards: int):
-    """Shard id of a key: a THIRD xxhash64 (seed 2), independent of the
-    two position hashes (seeds 0/1) — sharding on h1 itself would pin
-    every shard-s key's first bit position to a residue class of m."""
-    return F.pmod(F.xxhash64(key_col, F.lit(2)), F.lit(shards))
-
-
-def _bloom_shard_file(path: str, shard: int, shards: int) -> str:
-    import os as _os
-    if shards == 1:
-        return _os.path.join(path, "bitmap.bin")
-    return _os.path.join(path, f"shard_{shard:05d}.bin")
+def _bloom_hashed_by_shard(df: DataFrame, key: str, shards: int,
+                           *cols) -> DataFrame:
+    """``cols`` plus (_h1, _h2, _g = shard id), repartitioned on
+    (shard, 8-way salt) so each task holds ~1 shard. The shard id is a
+    THIRD xxhash64 (seed 2), independent of the two position hashes
+    (seeds 0/1) — sharding on h1 itself would pin every shard-s key's
+    first bit position to a residue class of m."""
+    shard = F.pmod(F.xxhash64(F.col(key), F.lit(2)), F.lit(shards))
+    return (df.select(*cols, *_bloom_hash_cols(F.col(key)),
+                      shard.cast("int").alias("_g"))
+            .repartition(F.col("_g"), F.pmod(F.col("_h1"), F.lit(8))))
 
 
 def _bloom_build_shards(seen: DataFrame, key: str, m_bits: int, k: int,
@@ -706,45 +730,34 @@ def _bloom_build_shards(seen: DataFrame, key: str, m_bits: int, k: int,
     the result through toLocalIterator — peak ONE shard bitmap, never
     the full index (the property that lets a 100 B-key lifetime index
     commit from a normal driver)."""
-    nbytes = m_bits // 8
-    hashed = (seen.select(
-        *_bloom_hash_cols(F.col(key)),
-        _bloom_shard_col(F.col(key), shards).cast("int").alias("_sh"))
-        .repartition(F.col("_sh"), F.pmod(F.col("_h1"), F.lit(8))))
-
-    def fold(batches):
-        bms: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for s, grp in pdf.groupby("_sh"):
-                bm = bms.setdefault(int(s),
-                                    np.zeros(nbytes, dtype=np.uint8))
-                pos = _bloom_positions(grp["_h1"].to_numpy(),
-                                       grp["_h2"].to_numpy(),
-                                       k, m_bits).reshape(-1)
-                np.bitwise_or.at(
-                    bm, (pos >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(np.uint8(1),
-                                  (pos & np.uint64(7)).astype(np.uint8)))
-        if bms:
-            yield pd.DataFrame({"_sh": list(bms),
-                                "_bm": [b.tobytes()
-                                        for b in bms.values()]})
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        for b in pdf["_bm"]:
-            bm |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame({"_sh": [int(pdf["_sh"].iloc[0])],
-                             "_bm": [bm.tobytes()]})
-
-    schema = "_sh int, _bm binary"
-    merged = (hashed.mapInPandas(fold, schema=schema)
-              .groupBy("_sh").applyInPandas(merge, schema=schema))
+    hashed = _bloom_hashed_by_shard(seen, key, shards)
+    merged = _bloom_merge(_bloom_fold(hashed, m_bits, k), m_bits)
     # driver-incremental: one (shard, m/8-byte) row at a time
     for row in merged.toLocalIterator():
-        yield int(row["_sh"]), row["_bm"]
+        yield int(row["_g"]), row["_bm"]
+
+
+def _bloom_shard_file(path: str, shard: int, shards: int) -> str:
+    import os as _os
+    if shards == 1:
+        return _os.path.join(path, "bitmap.bin")
+    return _os.path.join(path, f"shard_{shard:05d}.bin")
+
+
+_BLOOM_META_FILE = "meta.json"
+
+
+def _bloom_meta(path: str) -> dict | None:
+    """The index's meta.json (m_bits, k, fpp, design_items,
+    committed_items, shards, last_epoch), or None when ``path`` holds
+    no index yet."""
+    import json as _json
+    import os as _os
+    meta_p = _os.path.join(path, _BLOOM_META_FILE)
+    if not _os.path.exists(meta_p):
+        return None
+    with open(meta_p) as f:
+        return _json.load(f)
 
 
 def bloom_index_commit(df: DataFrame, key: str, path: str,
@@ -790,15 +803,10 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
     between the marker write and the commit, forever)."""
     import json as _json
     import os as _os
-    meta_p = _os.path.join(path, "meta.json")
+    meta = _bloom_meta(path)
     n_new = None
-    if _os.path.exists(meta_p):
-        with open(meta_p) as f:
-            meta = _json.load(f)
-        m_bits, k = meta["m_bits"], meta["k"]
-        shards = int(meta.get("shards", 1))
-        created = False
-    else:
+    created = meta is None
+    if created:
         if expected_items is not None:
             n = expected_items
         else:
@@ -810,7 +818,9 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
         meta = {"m_bits": m_bits, "k": k, "fpp": fpp,
                 "design_items": max(int(n), 1), "committed_items": 0,
                 "shards": shards}
-        created = True
+    else:
+        m_bits, k = meta["m_bits"], meta["k"]
+        shards = int(meta.get("shards", 1))
     if epoch_id is not None and int(epoch_id) <= int(
             meta.get("last_epoch", -1)):
         count_items = False    # replay of an already-counted epoch
@@ -855,10 +865,10 @@ def bloom_index_commit(df: DataFrame, key: str, path: str,
                                  int(epoch_id))
     # meta is the counter of record — write-then-replace so a crash
     # mid-write can't leave corrupt JSON behind the intact bitmaps
-    tmp_meta = meta_p + ".tmp"
-    with open(tmp_meta, "w") as f:
+    meta_p = _os.path.join(path, _BLOOM_META_FILE)
+    with open(meta_p + ".tmp", "w") as f:
         _json.dump(meta, f)
-    _os.replace(tmp_meta, meta_p)
+    _os.replace(meta_p + ".tmp", meta_p)
     return dict(meta)
 
 
@@ -872,7 +882,8 @@ def bloom_index_filter(batch: DataFrame, path: str,
     ~fpp of genuinely-novel keys drop too (false positives) — an
     over-drop, never a leaked duplicate, which is the safe direction
     for training dedup. Callers holding the committed table who need
-    exactness use seen_bloom_anti_join instead.
+    exactness use seen_bloom_anti_join instead. When ``path`` holds no
+    index yet (the first run), ``batch`` comes back unchanged.
 
     A SHARDED index (meta["shards"] = S > 1, see bloom_index_commit)
     never broadcasts: the batch repartitions once on the shard id
@@ -887,11 +898,10 @@ def bloom_index_filter(batch: DataFrame, path: str,
 
     Warns (loudly, driver-side) when the index has been filled past
     its design point — fpp grows past the configured target there."""
-    import json as _json
-    import os as _os
     import warnings
-    with open(_os.path.join(path, "meta.json")) as f:
-        meta = _json.load(f)
+    meta = _bloom_meta(path)
+    if meta is None:
+        return batch
     if meta["committed_items"] > meta["design_items"]:
         warnings.warn(
             f"bloom index {path} holds {meta['committed_items']} keys, "
@@ -909,36 +919,36 @@ def bloom_index_filter(batch: DataFrame, path: str,
                 .where(~F.col("_maybe_seen")).drop("_maybe_seen"))
 
     out_cols = list(batch.columns)
-    hashed = (batch.select(
-        "*", *_bloom_hash_cols(F.col(key)),
-        _bloom_shard_col(F.col(key), shards).cast("int").alias("_sh"))
-        .repartition(F.col("_sh"), F.pmod(F.col("_h1"), F.lit(8))))
+    hashed = _bloom_hashed_by_shard(batch, key, shards, "*")
 
     def survivors(batches):
         cache: dict[int, np.ndarray] = {}
         for pdf in batches:
-            if not len(pdf):
-                continue
             maybe = pd.Series(False, index=pdf.index)
-            for s, grp in pdf.groupby("_sh"):
+            for s, grp in pdf.groupby("_g"):
                 bm = cache.get(int(s))
                 if bm is None:      # ~1 shard/task after repartition
                     with open(_bloom_shard_file(path, int(s),
                                                 shards), "rb") as f:
                         bm = np.frombuffer(f.read(), dtype=np.uint8)
                     cache[int(s)] = bm
-                pos = _bloom_positions(grp["_h1"].to_numpy(),
-                                       grp["_h2"].to_numpy(),
-                                       k, m_bits)
-                hits = (bm[(pos >> np.uint64(3)).astype(np.int64)]
-                        & np.left_shift(
-                            np.uint8(1),
-                            (pos & np.uint64(7)).astype(np.uint8))
-                        ) != 0
-                maybe.loc[grp.index] = hits.all(axis=1)
+                maybe.loc[grp.index] = _bloom_test(
+                    bm, grp["_h1"].to_numpy(), grp["_h2"].to_numpy(),
+                    k, m_bits)
             yield pdf.loc[~maybe, out_cols]
 
     return hashed.mapInPandas(survivors, schema=batch.schema)
+
+
+def _seen_bloom_col(seen: DataFrame, key: str, fpp: float,
+                    expected_items: int | None):
+    """might_contain(``key``) Column against a Bloom sized for (or
+    counted from) ``seen`` and built from its ``key`` column."""
+    n = expected_items if expected_items is not None else seen.count()
+    m_bits, k = bloom_params(n, fpp)
+    bloom = bloom_build(seen.select(key), key, m_bits, k)
+    return _bloom_membership_col(seen.sparkSession, bloom, k, m_bits,
+                                 F.col(key))
 
 
 def seen_bloom_anti_join(batch: DataFrame, seen: DataFrame,
@@ -969,11 +979,7 @@ def seen_bloom_anti_join(batch: DataFrame, seen: DataFrame,
     correctness). The batch is scanned twice (novel + candidate
     branches), both map-side — persist the flagged batch upstream if
     its scan is expensive."""
-    spark = batch.sparkSession
-    n = expected_items if expected_items is not None else seen.count()
-    m_bits, k = bloom_params(n, fpp)
-    bloom = bloom_build(seen.select(key), key, m_bits, k)
-    maybe = _bloom_membership_col(spark, bloom, k, m_bits, F.col(key))
+    maybe = _seen_bloom_col(seen, key, fpp, expected_items)
     flagged = batch.withColumn("_maybe_seen", maybe)
     novel = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     cand = (flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
@@ -997,10 +1003,9 @@ def _para_instances(docs: DataFrame, id_col: str,
 def _rebuild_from_marked(docs: DataFrame, marked: DataFrame,
                          id_col: str, text_col: str) -> DataFrame:
     """Rebuild ``text_col`` from the instances of ``marked`` where
-    ``_rm`` is false — every doc keeps its group row (nulls skip
-    collect_list), so a fully-excised doc rebuilds to '' rather than
-    silently reverting to its original text; NULL-text docs have no
-    instances and pass through via the coalesce."""
+    ``_rm`` is false. NULL text stays NULL; a doc with no surviving
+    paragraph (every instance marked, or none left in ``marked``)
+    rebuilds to '' rather than reverting to its original text."""
     kept_struct = F.when(~F.col("_rm"), F.struct("_pos", "_para"))
     rebuilt = (marked.groupBy("_id")
                .agg(F.array_join(
@@ -1010,7 +1015,9 @@ def _rebuild_from_marked(docs: DataFrame, marked: DataFrame,
                    "\n\n").alias("_rebuilt")))
     return (docs.join(rebuilt, docs[id_col] == rebuilt["_id"], "left")
             .withColumn(text_col,
-                        F.coalesce("_rebuilt", F.col(text_col)))
+                        F.when(F.col(text_col).isNull(),
+                               F.lit(None).cast("string"))
+                         .otherwise(F.coalesce("_rebuilt", F.lit(""))))
             .drop("_id", "_rebuilt"))
 
 
@@ -1044,16 +1051,11 @@ def seen_bloom_paragraph_scrub(batch: DataFrame, seen: DataFrame,
     only candidate instances (true dups + ~fpp) join the digest set;
     the rebuild is one groupBy id. Pass ``expected_items`` (committed
     distinct-paragraph estimate) at scale to skip the sizing count."""
-    spark = batch.sparkSession
     seen_ph = (_para_instances(seen, id_col, text_col)
                .where(F.length("_para") > 0)
                .select("_ph").distinct())
-    n = expected_items if expected_items is not None else seen_ph.count()
-    m_bits, k = bloom_params(max(int(n), 1), fpp)
-    bloom = bloom_build(seen_ph, "_ph", m_bits, k)
     inst = _para_instances(batch, id_col, text_col)
-    maybe = (_bloom_membership_col(spark, bloom, k, m_bits,
-                                   F.col("_ph"))
+    maybe = (_seen_bloom_col(seen_ph, "_ph", fpp, expected_items)
              & (F.length("_para") > 0))
     flagged = inst.withColumn("_maybe", maybe)
     novel = (flagged.where(~F.col("_maybe"))
@@ -1097,33 +1099,21 @@ def bloom_paragraph_filter(docs: DataFrame, path: str,
     dedup). Contract mirrors bloom_index_filter: a committed paragraph
     is ALWAYS excised (no false negatives); ~fpp of genuinely-novel
     paragraphs excise too — an over-scrub, never leaked duplicate
-    text. Empty paragraphs are never excised (whitespace, not
-    content); fully-excised docs rebuild to ''; NULL-text docs pass
-    through. Sharded indexes work unchanged (the instance rows carry
+    text; ``docs`` comes back unchanged when ``path`` holds no index.
+    Empty paragraphs are never excised (whitespace, not content);
+    fully-excised docs rebuild to ''; NULL-text docs pass through.
+    Sharded indexes work unchanged (the instance rows carry
     fixed-width digests through the one shard shuffle)."""
+    if _bloom_meta(path) is None:
+        return docs
     inst = _para_instances(docs, id_col, text_col)
-    # bloom_index_filter DROPS might-contain rows, so a fully-excised
-    # doc keeps NO instance and loses its rebuild group row — the
-    # nullability guard below turns that absence into '' (only
-    # NULL-text docs have no instances for any other reason)
+    # bloom_index_filter DROPS might-contain instances: what survives
+    # is exactly the kept set (a fully-excised doc keeps none)
     kept = (bloom_index_filter(inst.where(F.length("_para") > 0),
                                path, "_ph")
             .unionByName(inst.where(F.length("_para") == 0)))
-    rebuilt = (kept.groupBy("_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("_pos", "_para"))),
-                       lambda x: x["_para"]),
-                   "\n\n").alias("_rebuilt")))
-    return (docs.join(rebuilt, docs[id_col] == rebuilt["_id"], "left")
-            .withColumn(
-                text_col,
-                # no kept instance + non-NULL text = fully excised
-                F.when(F.col(text_col).isNull(),
-                       F.lit(None).cast("string"))
-                 .otherwise(F.coalesce("_rebuilt", F.lit(""))))
-            .drop("_id", "_rebuilt"))
+    return _rebuild_from_marked(docs, kept.withColumn("_rm", F.lit(False)),
+                                id_col, text_col)
 
 
 def commit_minhash_index(docs: DataFrame, sigs_table: str,
@@ -1521,7 +1511,10 @@ def near_dup_clusters(pairs: DataFrame, max_iter: int = 20,
                                   F.coalesce("plabel", "label"))
                           .alias("label"))
                   .localCheckpoint())
-        cur = labels.agg(F.sum("label")).first()[0]
+        # exact decimal sum: raw xxhash64 ids overflow a long sum
+        # under ANSI, and a modular fold could hide a change
+        cur = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))
+                         ).first()[0]
         if cur == prev_sum:
             converged = True
             break

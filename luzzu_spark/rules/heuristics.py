@@ -35,13 +35,9 @@ def tokens_expr(text: Column | str = "text") -> Column:
 
 
 def with_token_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach tokens/n_tokens/n_chars/token_hashes once; rules read these.
-
-    token_hashes is materialized as its own column so every shingle
-    expression slices bound long arrays instead of re-hashing strings —
-    higher-order functions are CodegenFallback (interpreted), so keeping
-    the per-element work to long copies instead of string concat is a
-    ~4× win on the repetition rule (measured at sf0.1 ×20)."""
+    """Attach tokens/n_tokens/n_chars once; rules read these. NULL
+    text behaves as the empty doc. Dedup shingling adds token_hashes
+    on top (with_token_hashes); the quality pipeline never does."""
     return (df.withColumns({
         "tokens": tokens_expr(text_col),
         "n_chars": F.length(F.coalesce(F.col(text_col), F.lit(""))),

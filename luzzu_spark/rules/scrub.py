@@ -54,44 +54,26 @@ ALL_STEPS: tuple[tuple[str, str, str], ...] = SCRUB_CHAIN + (
 )
 
 
-# one alternation of every step's pattern: a single probe pass decides
-# whether the replace chain needs to run at all
+# one alternation of every step's pattern: matches a row exactly when
+# some step has something to replace. Not used by the scrub itself (gating the chain on it
+# cost more than it saved); the benchmark reports its hit fraction.
 COMBINED_PROBE = "|".join(f"(?:{pat})" for _name, pat, _ in ALL_STEPS)
 
 
 def scrub_expr(col: Column | str = "text") -> Column:
-    """The full scrub chain as one nested Catalyst expression.
-
-    Guarded by a single combined-probe rlike: rows with no PII/toxicity
-    (the common case on real corpora) pay ONE regex pass instead of
-    five replace passes; matching rows pay probe + chain. Equivalence:
-    the chain is the identity exactly when no pattern matches, which is
-    exactly when the probe is false — so output, determinism, and
-    idempotence are unchanged."""
+    """The full scrub chain as one nested Catalyst expression: five
+    regexp_replace steps in the frozen order. A row no pattern matches
+    passes through unchanged."""
     c = F.col(col) if isinstance(col, str) else col
     c = F.coalesce(c, F.lit(""))   # null doc scrubs to "" (matches oracle)
-    chained = c
     for _name, pat, repl in ALL_STEPS:
-        chained = F.regexp_replace(chained, pat, repl)
-    return F.when(c.rlike(COMBINED_PROBE), chained).otherwise(c)
-
-
-def scrub_flags(col: Column | str = "text") -> dict[str, Column]:
-    """Per-step fired? booleans (evaluated on the PRE-scrub text)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return {f"scrub_{name}": c.rlike(pat) for name, pat, _ in ALL_STEPS}
+        c = F.regexp_replace(c, pat, repl)
+    return c
 
 
 def with_scrub(df: DataFrame, text_col: str = "text",
-               out_col: str = "text_scrubbed",
-               flags: bool = False) -> DataFrame:
-    """flags=True additionally attaches per-step scrub_<name> booleans
-    (5 extra regex passes/row — reporting runs only; the hot filter path
-    leaves them off)."""
-    cols = {out_col: scrub_expr(text_col)}
-    if flags:
-        cols.update(scrub_flags(text_col))
-    return df.withColumns(cols)
+               out_col: str = "text_scrubbed") -> DataFrame:
+    return df.withColumn(out_col, scrub_expr(text_col))
 
 
 # -- plain-Python twin (used by the pandas oracle and property tests) -----

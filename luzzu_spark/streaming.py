@@ -401,8 +401,7 @@ def write_stream_filtered_bloom(pages: DataFrame, out_path: str,
             batch_df = (batch_df
                         .withColumn("_rn", F.row_number().over(w))
                         .where(F.col("_rn") == 1).drop("_rn"))
-            if os.path.exists(os.path.join(bloom_path, "meta.json")):
-                batch_df = bloom_index_filter(batch_df, bloom_path, key)
+            batch_df = bloom_index_filter(batch_df, bloom_path, key)
             kept = pipe.filtered(batch_df)
             write_epoch_idempotent(kept, out_path, epoch_id)
             os.makedirs(bloom_path, exist_ok=True)

@@ -277,8 +277,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
         if args.as_webpages or "url" not in pages.columns:
             pages = as_webpages(pages, inject_pii=args.inject_pii)
         bloom_path = getattr(args, "seen_bloom_path", None)
-        if bloom_path and os.path.exists(
-                os.path.join(bloom_path, "meta.json")):
+        if bloom_path:
             # approximate cross-run dedup: one map-only Arrow stage,
             # zero committed-side I/O (committed urls always drop;
             # ~fpp of novel urls over-drop — documented trade)
@@ -307,8 +306,7 @@ def run_job(spark: SparkSession, args: argparse.Namespace) -> dict:
                 spark, pages, nd_sigs, nd_bands,
                 threshold=getattr(args, "neardup_threshold", 0.5))
         para_bloom = getattr(args, "paragraph_bloom_path", None)
-        if para_bloom and os.path.exists(
-                os.path.join(para_bloom, "meta.json")):
+        if para_bloom:
             # cross-run PARAGRAPH scrub: committed paragraphs excise
             # and the text rebuilds BEFORE assessment, so the quality
             # rules score the deduplicated text (a fully-excised doc

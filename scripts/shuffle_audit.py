@@ -49,7 +49,7 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from luzzu_spark.session import get_spark  # noqa: E402
+from luzzu_spark.session import get_spark, local_cpus  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -107,7 +107,7 @@ def on_disk_bytes(df) -> int:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     spark = get_spark("luzzu_shuffle_audit", master=f"local[{cpus}]",
                       extra_conf={"spark.ui.enabled": "true",
                                   "spark.ui.port": "4055",

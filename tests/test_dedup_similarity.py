@@ -296,6 +296,24 @@ def test_near_dup_clusters_exact_components(spark):
                    (20, 20), (21, 20)}
 
 
+def test_near_dup_clusters_hash_sized_ids(spark):
+    """Doc ids are often xxhash64 values (sources.read_wet): the label
+    sum behind the convergence check must not overflow a long under
+    ANSI. Five labels near 2^62 sum past 2^63 on every round."""
+    big, neg = 2**62, -(2**62)
+    pairs = spark.createDataFrame(
+        [(big + 3, big + 2), (big + 2, big + 1),   # chain
+         (big + 10, big + 11),                     # pair
+         (neg - 5, neg - 4)],                      # pair below zero
+        "id_a long, id_b long")
+    got = {(r.doc_id, r.cluster)
+           for r in dedup.near_dup_clusters(pairs).collect()}
+    assert got == {(big + 1, big + 1), (big + 2, big + 1),
+                   (big + 3, big + 1), (big + 10, big + 10),
+                   (big + 11, big + 10), (neg - 5, neg - 5),
+                   (neg - 4, neg - 5)}
+
+
 def test_near_dup_survivors_chain_keeps_one(spark):
     """VERDICT r1 item 6: a planted chain a~b~c where (a,c) is NOT a
     candidate pair must keep exactly one survivor (the lowest id).
@@ -1431,3 +1449,56 @@ def test_bloom_index_meta_backcompat_no_shards_key(spark, tmp_path):
     dedup.bloom_index_commit(more, "url", idx)
     assert os.path.exists(os.path.join(idx, "bitmap.bin"))
     assert dedup.bloom_index_filter(more, idx, "url").count() == 0
+
+
+# md5 of every file a fixed 300-key commit writes; an index persisted by
+# an earlier run must stay readable, so these constants never change
+# unless the on-disk format changes on purpose
+_BLOOM_FORMAT_PIN = {
+    1: {"bitmap.bin": "8182303d6970cbbc02ee31730bf24f7b",
+        "meta.json": "82e9506545a131b5d575924ebb7debb2"},
+    8: {"meta.json": "3d3ecc18eefb3f77c105332744940830",
+        "shard_00000.bin": "2ea8c41de68b6c97475b1adb8a94eecc",
+        "shard_00001.bin": "4cdae82b91032e5c1772fa654fe3666d",
+        "shard_00002.bin": "dfd1ba2cd5661e6ed2ac24443a4a81b8",
+        "shard_00003.bin": "42c73d2dea8724fb8f96868475077e88",
+        "shard_00004.bin": "1e180e3e3b7790514c8140f8b0e6b72d",
+        "shard_00005.bin": "f7d7339f069d1968439adfe2095fec17",
+        "shard_00006.bin": "36a2552b2dc2e032b121493ba8f15f26",
+        "shard_00007.bin": "e4c68e46a2aa5413ca9fe7565e089d5e"},
+}
+
+
+def test_bloom_index_on_disk_format_pinned(spark, tmp_path):
+    """bloom_index_commit writes byte-identical bitmap files and
+    meta.json for a fixed key list, single-file and sharded layout."""
+    import hashlib
+
+    keys = spark.createDataFrame(
+        [(f"http://pin.example/{i}",) for i in range(300)], "url string")
+    for shards, want in _BLOOM_FORMAT_PIN.items():
+        idx = tmp_path / f"pin{shards}"
+        dedup.bloom_index_commit(keys, "url", str(idx), shards=shards)
+        got = {f.name: hashlib.md5(f.read_bytes()).hexdigest()
+               for f in idx.iterdir()}
+        assert got == want, shards
+
+
+def test_bloom_filters_pass_through_without_index(spark, tmp_path):
+    """With no index at ``path`` (a first run), bloom_index_filter and
+    bloom_paragraph_filter return their input unchanged — same rows,
+    same plan — and create nothing at ``path``."""
+    import os
+
+    missing = str(tmp_path / "no_index")
+    batch = spark.createDataFrame(
+        [(1, "http://a.example/1", "p one\n\np two"),
+         (2, "http://a.example/2", None)],
+        "doc_id long, url string, text string")
+    for out in (dedup.bloom_index_filter(batch, missing, "url"),
+                dedup.bloom_paragraph_filter(batch, missing)):
+        assert out.sameSemantics(batch)
+        assert (out._jdf.queryExecution().executedPlan().toString()
+                == batch._jdf.queryExecution().executedPlan().toString())
+        assert sorted(out.collect()) == sorted(batch.collect())
+    assert not os.path.exists(missing)
